@@ -955,6 +955,9 @@ def _ed_set(stmt, ctx, df, cond):
         # func_set.go: `if val != nil` — setting a literal nil is a
         # whole-statement no-op (e2e corpus: set(attributes["test"], nil))
         return df
+    # a value nil only at runtime is a per-row no-op: Context.setter
+    # guards it after the error-mode fold, so a failing Get still raises
+    # first, as func_set.go checks err before val != nil
     vcol = compile_value(value, ctx)
     tcol, tkeys = ctx.resolve(target)
     target_is_variant = ctx.path_types.get(tcol) == VARIANT

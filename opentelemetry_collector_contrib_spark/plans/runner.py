@@ -7,27 +7,35 @@ storage extension so a restart resumes where ingest stopped
 (pkg/stanza/fileconsumer/internal/checkpoint/checkpoint.go:20-45,
 pkg/stanza/adapter/storage.go:14-33). Our unit of progress is a *stage*,
 not a byte offset: each stage's output DataFrame is materialized to a
-checkpoint table, and a `_pipeline_state` record commits (stage name,
-input fingerprint, per-output-file row counts = partition lineage, row
-count, wall seconds). A rerun skips every stage whose committed state
-matches the current input fingerprint and replays downstream stages from
-the checkpointed parquet instead of recomputing upstream.
+parquet checkpoint, and a `_pipeline_state` record commits (stage name,
+input fingerprint, the checkpoint's schema, per-output-file row counts =
+partition lineage, row count, wall seconds). A rerun skips every stage
+whose committed state matches the current input fingerprint and replays
+downstream stages from the checkpointed parquet instead of recomputing
+upstream.
 
 Fingerprints play the role of Iceberg snapshot IDs: a source fingerprint
 hashes the file listing (relative path, size, mtime); a stage fingerprint
-hashes (stage name, its code-version tag, upstream fingerprints). On a
-cluster with an Iceberg catalog the checkpoint format string becomes
-"iceberg" and fingerprints become real snapshot IDs — the control flow is
-unchanged (the state record is engine-agnostic JSON either way).
+hashes (stage name, its code-version tag, upstream fingerprints).
 
 Atomicity: parquet checkpoint is written first (Spark's own _SUCCESS
 commit protocol), then the state JSON lands via tmp-file + os.replace —
 a crash between the two re-runs the stage, never serves half a table.
+A record without a stored schema counts as uncommitted too.
 
-Scale notes: state records are O(stages), not O(rows) — driver-side JSON
-is fine at any data scale. Lineage per-file row counts come from Spark's
-own write metrics path (a groupBy over input_file_name() on the
-checkpoint read-back, one cheap metadata-sized job per stage).
+Cost: a computed stage launches only the jobs of its checkpoint write
+(one for a plain plan; broadcasts and adaptive query stages add theirs),
+and a resumed stage launches none.
+- Read-back passes the schema stored in the state record to
+  ``spark.read.schema``, so no parquet schema-inference job runs; a
+  bucketed stage re-registers its catalog table from the same schema.
+- Lineage comes from the parquet footers of the checkpoint's part files,
+  read on the driver (O(files) metadata reads, no Spark job). Zero-row
+  files are left out, as a scan attributes no row to them: an empty
+  stage records rows_out 0, n_files 0 and no partitions. This is why
+  checkpoints are parquet only.
+State records are O(stages), not O(rows) — driver-side JSON is fine at
+any data scale.
 """
 
 from __future__ import annotations
@@ -39,8 +47,9 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 STATE_DIR = "_pipeline_state"
 
@@ -62,6 +71,20 @@ def source_fingerprint(path: str) -> str:
                 rel = os.path.relpath(fp, path)
                 h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode())
     return h.hexdigest()[:16]
+
+
+def footer_lineage(ckpt: str) -> list[dict]:
+    """Per-file row counts of a parquet checkpoint, read from the part
+    files' footers on the driver. Files a scan ignores (``_SUCCESS``,
+    ``.crc``) and zero-row files are left out."""
+    parts = []
+    for name in sorted(os.listdir(ckpt)):
+        if name.startswith((".", "_")):
+            continue
+        rows = pq.read_metadata(os.path.join(ckpt, name)).num_rows
+        if rows:
+            parts.append({"file": name, "rows": rows})
+    return parts
 
 
 @dataclass
@@ -87,15 +110,9 @@ class Stage:
 
 
 class PipelineRunner:
-    def __init__(
-        self,
-        spark: SparkSession,
-        checkpoint_root: str,
-        fmt: str = "parquet",
-    ) -> None:
+    def __init__(self, spark: SparkSession, checkpoint_root: str) -> None:
         self.spark = spark
         self.root = checkpoint_root
-        self.fmt = fmt
         os.makedirs(os.path.join(self.root, STATE_DIR), exist_ok=True)
         # observability for tests & logs: which stages actually computed
         self.computed: list[str] = []
@@ -124,23 +141,25 @@ class PipelineRunner:
     def _ckpt_table(self, stage: str) -> str:
         return f"ckpt_{stage}"
 
-    def _load_ckpt(self, stage: Stage, ckpt: str) -> DataFrame:
-        """Read a stage checkpoint back. Bucketed checkpoints MUST come
-        through the catalog (a bare read.parquet(path) loses the bucket
-        metadata and reintroduces the shuffle); after a restart the
-        in-memory catalog is empty, so re-register the external table
-        from the checkpoint's own schema first."""
+    def _load_ckpt(
+        self, stage: Stage, ckpt: str, schema: StructType
+    ) -> DataFrame:
+        """Read a stage checkpoint back with the schema it was written
+        with (no inference job). Bucketed checkpoints MUST come through
+        the catalog (a bare read.parquet(path) loses the bucket metadata
+        and reintroduces the shuffle); after a restart the in-memory
+        catalog is empty, so re-register the external table from that
+        schema first."""
         if stage.bucket_by is None:
-            return self.spark.read.format(self.fmt).load(ckpt)
+            return self.spark.read.schema(schema).parquet(ckpt)
         tbl = self._ckpt_table(stage.name)
         if not self.spark.catalog.tableExists(tbl):
             key, n = stage.bucket_by
-            ddl = self.spark.read.format(self.fmt).load(ckpt).schema.toDDL()
             sorted_by = (
                 f"SORTED BY ({', '.join(stage.sort_by)}) " if stage.sort_by else ""
             )
             self.spark.sql(
-                f"CREATE TABLE {tbl} ({ddl}) USING {self.fmt} "
+                f"CREATE TABLE {tbl} ({schema.toDDL()}) USING parquet "
                 f"CLUSTERED BY ({key}) {sorted_by}INTO {n} BUCKETS "
                 f"LOCATION '{os.path.abspath(ckpt)}'"
             )
@@ -182,9 +201,11 @@ class PipelineRunner:
                 state is not None
                 and state.get("fingerprint") == fp
                 and state.get("status") == "committed"
+                and "schema" in state
                 and os.path.exists(os.path.join(ckpt, "_SUCCESS"))
             ):
-                outputs[stage.name] = self._load_ckpt(stage, ckpt)
+                schema = StructType.fromJson(json.loads(state["schema"]))
+                outputs[stage.name] = self._load_ckpt(stage, ckpt, schema)
                 self.skipped.append(stage.name)
                 continue
 
@@ -199,25 +220,17 @@ class PipelineRunner:
                     sort_cols=stage.sort_by,
                 )
             else:
-                df.write.format(self.fmt).mode("overwrite").save(ckpt)
-            out = self._load_ckpt(stage, ckpt)
+                df.write.mode("overwrite").parquet(ckpt)
+            out = self._load_ckpt(stage, ckpt, df.schema)
             # per-partition lineage: output file ↔ write task; rows per file
-            lineage_rows = (
-                out.groupBy(F.input_file_name().alias("file"))
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .collect()
-            )
-            lineage = sorted(
-                ({"file": os.path.basename(r["file"]), "rows": r["rows"]}
-                 for r in lineage_rows),
-                key=lambda p: p["file"],
-            )
+            lineage = footer_lineage(ckpt)
             self._commit_state(
                 stage.name,
                 {
                     "stage": stage.name,
                     "fingerprint": fp,
                     "status": "committed",
+                    "schema": out.schema.json(),
                     "rows_out": int(sum(p["rows"] for p in lineage)),
                     "n_files": len(lineage),
                     "partitions": lineage,

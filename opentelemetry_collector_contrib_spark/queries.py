@@ -3691,7 +3691,7 @@ FROM events""",
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS gid
   FROM {_TR}
 )
-SELECT conv_id, gid AS group_id, count(*)::BIGINT AS n_parts,
+SELECT conv_id, gid::BIGINT AS group_id, count(*)::BIGINT AS n_parts,
        string_agg(text, chr(10) ORDER BY turn_idx) AS chunk_text
 FROM marked GROUP BY conv_id, gid""",
     )

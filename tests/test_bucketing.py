@@ -105,6 +105,8 @@ def test_runner_bucketed_checkpoint_survives_catalog_loss(
     r2 = PipelineRunner(spark, root)
     out2 = r2.run(stages, fps)
     assert r2.skipped == ["parsed"]
+    # re-registered from the schema stored in the state record
+    assert out2["parsed"].schema == out1["parsed"].schema
 
     agg = out2["parsed"].groupBy("conv_id").agg(F.count(F.lit(1)).alias("n"))
     assert "Exchange" not in _plan(agg)

@@ -9,6 +9,7 @@ case; results compared exactly.
 from __future__ import annotations
 
 import datetime
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,7 +22,7 @@ from opentelemetry_collector_contrib_spark.ottl import (
     compile_statement,
     parse_statement,
 )
-from opentelemetry_collector_contrib_spark.ottl.compiler import Context
+from opentelemetry_collector_contrib_spark.ottl.compiler import VARIANT, Context
 
 LOG_SCHEMA = T.StructType([
     T.StructField("body", T.StringType()),
@@ -485,6 +486,28 @@ def test_set_nil_is_noop_not_delete(log_df):
     # whole-column set with nil keeps the column
     out3 = one(compile_statement("set(body, nil)")(log_df))
     assert out3["body"] == ROW["body"]
+    # nil at runtime, under a where clause, and into a whole column
+    out4 = one(compile_statement(
+        'set(attributes["http.method"], attributes["missing"]) '
+        "where severity_number > 0"
+    )(log_df))
+    assert out4["attributes"]["http.method"] == "get"
+    out5 = one(compile_statement(
+        'set(severity_text, attributes["missing"])'
+    )(log_df))
+    assert out5["severity_text"] == ROW["severity_text"]
+    # runtime-typed (VARIANT) map: a missing key and a JSON null are nil
+    vdf = log_df.withColumn("attrs_var", F.parse_json(F.lit('{"x": "keep", "n": null}')))
+    for stmt in (
+        'set(attributes["x"], attributes["missing"])',
+        'set(attributes["x"], attributes["n"])',
+    ):
+        ctx = Context(
+            path_map={"attributes": "attrs_var"},
+            path_types={"attrs_var": VARIANT},
+        )
+        got = compile_statement(stmt, ctx)(vdf).select(F.to_json("attrs_var"))
+        assert json.loads(got.first()[0])["x"] == "keep", stmt
 
 
 def test_deep_map_set_three_keys(log_df):
